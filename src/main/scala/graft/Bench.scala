@@ -143,6 +143,21 @@ object Bench {
         f"[bench] settle TIMED OUT at ${waited}%.0f s with load $l%.2f — proceeding")
     waited
   }
+
+  /** SPARK_GRAFT_CONF="k=v;k2=v2" — runtime conf overrides for A/B runs
+    * (e.g. graft.cc.driver_max_edges=0 forces the distributed fallbacks
+    * without a code edit).
+    */
+  private[graft] def applyConfOverrides(spark: SparkSession): Unit =
+    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.nonEmpty)
+      .foreach { kv =>
+        kv.split("=", 2) match {
+          case Array(k, v) => spark.conf.set(k.trim, v.trim)
+          case _ => throw new IllegalArgumentException(
+            s"SPARK_GRAFT_CONF entries must be k=v, got '$kv'")
+        }
+      })
+
   def main(args: Array[String]): Unit = {
     // settle BEFORE the JVM heats up: stray prior-phase JVMs die, dirty
     // pages flush, and the timed sweep starts on a quiet machine
@@ -170,17 +185,7 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CONF="k=v;k2=v2" — runtime conf overrides for A/B runs
-    // (e.g. graft.vocab_broadcast.max_corpus_bytes=1 forces the
-    // unbounded-corpus fallbacks without a code edit)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.nonEmpty)
-      .foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => spark.conf.set(k.trim, v.trim)
-          case _ => throw new IllegalArgumentException(
-            s"SPARK_GRAFT_CONF entries must be k=v, got '$kv'")
-        }
-      })
+    applyConfOverrides(spark)
 
     // Warmup: touch every table once (filesystem cache + codegen + shuffle machinery).
     Seq("lineitem", "orders", "customer", "supplier", "nation", "region",

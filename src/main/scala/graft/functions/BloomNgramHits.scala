@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -29,8 +29,7 @@ import org.apache.spark.sql.types._
   *    n-grams count once (the array_distinct twin).
   *
   * `left` = array<string> tokens; `right` = array<long> bitmap words.
-  * `n` and `numHashes` ride the constructor (extracted from literal
-  * arguments at registration).
+  * `n` and `numHashes` ride the constructor as call-site constants.
   */
 case class BloomNgramHits(left: Expression, right: Expression,
                           n: Int, numHashes: Int)
@@ -99,18 +98,4 @@ case class BloomNgramHits(left: Expression, right: Expression,
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): BloomNgramHits =
     copy(left = newLeft, right = newRight)
-}
-
-object BloomNgramHits {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_ngram_hits", { exprs =>
-        def litInt(e: Expression, name: String): Int = e match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"bloom_ngram_hits: $name must be an integer literal, got $other")
-        }
-        BloomNgramHits(exprs(0), exprs(1),
-          litInt(exprs(2), "n"), litInt(exprs(3), "numHashes"))
-      }, "built-in")
 }

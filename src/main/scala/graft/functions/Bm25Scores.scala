@@ -39,6 +39,8 @@ case class Bm25Scores(child: Expression,
                       qids: Seq[Long], avgdl: Double)
   extends UnaryExpression {
 
+  require(qids.length <= 64, "bm25_scores: at most 64 standing queries")
+
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("qid", LongType, nullable = false),
     StructField("score", DoubleType, nullable = false),
@@ -124,26 +126,4 @@ case class Bm25Scores(child: Expression,
 
   override protected def withNewChildInternal(newChild: Expression): Bm25Scores =
     copy(child = newChild)
-}
-
-object Bm25Scores {
-  /** Register a fitted BM25 scorer; the name carries a digest of the
-    * fitted state (the MinhashSig/PercolateScores discipline).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession,
-               terms: Seq[String], idfs: Seq[Double], masks: Seq[Long],
-               qids: Seq[Long], avgdl: Double): String = {
-    require(qids.length <= 64, "bm25_scores: at most 64 standing queries")
-    val digest = (terms.foldLeft(17L)(_ * 31 + _.hashCode) * 31 +
-      idfs.foldLeft(17L)((h, d) =>
-        h * 31 + java.lang.Double.doubleToLongBits(d)) * 31 +
-      masks.foldLeft(17L)(_ * 31 + _) * 31 +
-      qids.foldLeft(17L)(_ * 31 + _) * 31 +
-      java.lang.Double.doubleToLongBits(avgdl)) & Long.MaxValue
-    val name = s"bm25_scores_${qids.length}_${terms.length}_$digest"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => Bm25Scores(exprs.head, terms, idfs, masks, qids, avgdl),
-      "built-in")
-    name
-  }
 }

@@ -115,16 +115,3 @@ case class BpeStats(child: Expression, merges: Seq[(String, String)])
   override protected def withNewChildInternal(newChild: Expression): BpeStats =
     copy(child = newChild)
 }
-
-object BpeStats {
-  /** Registered under a merge-table-content name (the MinhashExprs
-    * discipline) so the builder can close over the table.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession,
-               merges: Seq[(String, String)]): String = {
-    val name = s"bpe_stats_${merges.hashCode.toHexString}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => BpeStats(exprs.head, merges), "built-in")
-    name
-  }
-}

@@ -113,9 +113,3 @@ case class ClsProbFold(left: Expression, right: Expression)
       newLeft: Expression, newRight: Expression): ClsProbFold =
     copy(left = newLeft, right = newRight)
 }
-
-object ClsProbFold {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cls_prob_fold", exprs => ClsProbFold(exprs(0), exprs(1)), "built-in")
-}

@@ -85,9 +85,3 @@ case class DsirFold(left: Expression, right: Expression)
       newLeft: Expression, newRight: Expression): DsirFold =
     copy(left = newLeft, right = newRight)
 }
-
-object DsirFold {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dsir_fold", exprs => DsirFold(exprs(0), exprs(1)), "built-in")
-}

@@ -23,7 +23,7 @@ import org.apache.spark.sql.types._
   *
   * Empty-string tokens COUNT (split("\\s+") emits them; the relational twin
   * never filtered); null elements are skipped and excluded from dl (the
-  * registered-fold family's null discipline).
+  * fitted-fold family's null discipline).
   */
 case class EntropyStats(child: Expression) extends UnaryExpression {
 
@@ -81,11 +81,4 @@ case class EntropyStats(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): EntropyStats =
     copy(child = newChild)
-}
-
-object EntropyStats {
-  /** Register `entropy_stats(tokens)` (stateless — a fixed name). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "entropy_stats", exprs => EntropyStats(exprs.head), "built-in")
 }

@@ -7,13 +7,15 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
-/** Session-wide injection of graft's custom expressions — the idiomatic
-  * deployment path (`spark.sql.extensions=graft.functions.GraftExtensions`)
-  * instead of per-call temp-function registration:
+/** Session-wide injection of graft's custom expressions for SQL users
+  * (`spark.sql.extensions=graft.functions.GraftExtensions`). graft's own
+  * code never looks an expression up by name: it builds each one as a
+  * Column through `org.apache.spark.sql.GraftColumnBridge`, so nothing
+  * here is needed by the library itself:
   *
   *  - SQL functions: `poly_hash`, `dot_prod` (the parameterized expressions
-  *    — shingle_join / minhash_sig / band_fold — keep their registration
-  *    helpers because their constants are call-site configuration);
+  *    — shingle_join / minhash_sig / band_fold — have no SQL name: their
+  *    constants are call-site configuration passed to the constructor);
   *  - an optimizer rule, [[RewriteDotProduct]], that recognizes the HOF
   *    dot-product pattern `aggregate(zip_with(a, b, (x,y) -> x*y), 0.0,
   *    (acc,x) -> acc + x)` and swaps in the codegen'd [[DotProd]] — user

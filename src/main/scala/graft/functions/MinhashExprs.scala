@@ -65,15 +65,6 @@ case class ShingleJoin(child: Expression, n: Int) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object ShingleJoin {
-  def register(spark: org.apache.spark.sql.SparkSession, n: Int): String = {
-    val name = s"shingle_join_$n"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => ShingleJoin(exprs.head, n), "built-in")
-    name
-  }
-}
-
 /** Portable 60-bit hash of every element of a string array, optionally
   * reduced mod `m` — equals `transform(arr, x -> pmod(portable_hash(x), m))`
   * where portable_hash = `conv(substr(sha2(x, 256), 1, 15), 16, 10)`:
@@ -119,15 +110,6 @@ case class PortableHashArr(child: Expression, mod: Long) extends UnaryExpression
 
   override protected def withNewChildInternal(newChild: Expression): PortableHashArr =
     copy(child = newChild)
-}
-
-object PortableHashArr {
-  def register(spark: org.apache.spark.sql.SparkSession, mod: Long): String = {
-    val name = s"portable_hash_arr_$mod"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => PortableHashArr(exprs.head, mod), "built-in")
-    name
-  }
 }
 
 /** LSH band keys of a minhash signature: fold each of `bands` consecutive
@@ -177,19 +159,6 @@ case class BandFold(child: Expression, bands: Int, rowsPerBand: Int,
 
   override protected def withNewChildInternal(newChild: Expression): BandFold =
     copy(child = newChild)
-}
-
-object BandFold {
-  def register(spark: org.apache.spark.sql.SparkSession, bands: Int,
-               rowsPerBand: Int, prime: Long): String = {
-    // The registry is last-writer-wins session-wide, so every defining
-    // constant must be part of the name — two pipelines with different
-    // primes must not share one binding.
-    val name = s"band_fold_${bands}_${rowsPerBand}_$prime"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => BandFold(exprs.head, bands, rowsPerBand, prime), "built-in")
-    name
-  }
 }
 
 /** MinHash signature of a base-hash array: for each permutation p,
@@ -244,20 +213,8 @@ case class MinhashSig(child: Expression, as: Array[Long], bs: Array[Long],
 }
 
 object MinhashSig {
-  def register(spark: org.apache.spark.sql.SparkSession,
-               params: Seq[(Long, Long)], prime: Long): String = {
-    // Name carries every defining constant (perm count, prime, and a digest
-    // of the permutation params) — createOrReplaceTempFunction is
-    // last-writer-wins session-wide, so differently-seeded registrations
-    // must land on distinct names.
-    val paramsDigest =
-      (params.foldLeft(17L) { case (h, (a, b)) => (h * 31 + a) * 31 + b }
-        & Long.MaxValue)
-    val name = s"minhash_sig_${params.length}_${prime}_$paramsDigest"
-    val as = params.map(_._1).toArray
-    val bs = params.map(_._2).toArray
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => MinhashSig(exprs.head, as, bs, prime), "built-in")
-    name
-  }
+  /** Signature over the universal hash family `params` = (a, b) pairs. */
+  def apply(child: Expression, params: Seq[(Long, Long)],
+            prime: Long): MinhashSig =
+    MinhashSig(child, params.map(_._1).toArray, params.map(_._2).toArray, prime)
 }

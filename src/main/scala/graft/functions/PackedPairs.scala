@@ -99,16 +99,3 @@ case class PackedSkipPairs(child: Expression, vocab: IndexedSeq[String])
   override protected def withNewChildInternal(newChild: Expression): PackedSkipPairs =
     copy(child = newChild)
 }
-
-object PackedSkipPairs {
-  /** Registered under a dictionary-content name (the BpeStats discipline)
-    * so the builder can close over the collected vocabulary.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession,
-               vocab: IndexedSeq[String]): String = {
-    val name = s"packed_skip_pairs_${vocab.length}_${vocab.hashCode.toHexString}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => PackedSkipPairs(exprs.head, vocab), "built-in")
-    name
-  }
-}

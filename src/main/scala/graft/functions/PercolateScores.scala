@@ -30,7 +30,7 @@ import org.apache.spark.sql.types._
   * batch side's array_distinct before its explode.
   *
   * `child` = array<string> tokens; `terms`/`vecs` (parallel: per-term dense
-  * micro vectors, length nq) ride the constructor from registration — the
+  * micro vectors, length nq) ride the constructor — the
   * percolator's fitted state is metadata-scale, embedded in the plan like
   * the minhash permutation params.
   */
@@ -90,14 +90,11 @@ case class PercolateScores(child: Expression,
 }
 
 object PercolateScores {
-  /** Register a percolator over the collected standing queries (ordered:
-    * query index i = position in `queries`). The name carries a digest of
-    * the fitted state — createOrReplaceTempFunction is last-writer-wins
-    * session-wide, so differently-fitted percolators must land on
-    * distinct names (the MinhashSig discipline).
+  /** A percolator over the collected standing queries (ordered: query
+    * index i = position in `queries`), folded into the per-term table.
     */
-  def register(spark: org.apache.spark.sql.SparkSession,
-               queries: Seq[(Long, Seq[(String, Double)], Double)]): String = {
+  def apply(child: Expression,
+            queries: Seq[(Long, Seq[(String, Double)], Double)]): PercolateScores = {
     val nq = queries.length
     val byTerm = scala.collection.mutable.LinkedHashMap[String, Array[Long]]()
     queries.zipWithIndex.foreach { case ((_, terms, _), qi) =>
@@ -107,13 +104,7 @@ object PercolateScores {
         byTerm.getOrElseUpdate(term, new Array[Long](nq))(qi) += micros
       }
     }
-    val ts = byTerm.keys.toSeq
-    val vs = byTerm.values.map(_.toSeq).toSeq
-    val digest = (ts.foldLeft(17L)(_ * 31 + _.hashCode) * 31 +
-      vs.foldLeft(17L)((h, v) => v.foldLeft(h)(_ * 31 + _))) & Long.MaxValue
-    val name = s"percolate_scores_${nq}_${ts.length}_$digest"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => PercolateScores(exprs.head, ts, vs, nq), "built-in")
-    name
+    PercolateScores(child, byTerm.keys.toSeq,
+      byTerm.values.map(_.toSeq).toSeq, nq)
   }
 }

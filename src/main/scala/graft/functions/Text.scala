@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis column expressions for LLM-training-data pipelines
@@ -51,22 +52,17 @@ object Text {
     }
   }
 
-  private def native(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(e)
-  private def expr(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
-    org.apache.spark.sql.GraftColumnBridge.expression(c)
-
   /** Whitespace-delimited token count — native one-pass codegen twin of
     * `regexp_count(text, '\S+')` (bit-equal, PropertyExprSpec-pinned; the
     * DuckDB oracles keep the regex form).
     */
-  def tokenCountWs(text: Column): Column = native(WsTokenCount(expr(text)))
+  def tokenCountWs(text: Column): Column = column(WsTokenCount(expression(text)))
 
   /** BPE-ish token count: lowercase runs, capitalized words, digits,
     * punctuation singles — native one-pass codegen twin of
     * `regexp_count(text, BpeTokenPattern)` (bit-equal, property-pinned).
     */
-  def tokenCountBpe(text: Column): Column = native(BpeTokenCount(expr(text)))
+  def tokenCountBpe(text: Column): Column = column(BpeTokenCount(expression(text)))
 
   /** Document quality score in [0,1]: length credit × punctuation penalty ×
     * stopword credit. Deterministic double arithmetic (same op order as the
@@ -167,11 +163,8 @@ object Text {
     * higher-order formulation it replaced is kept below as the spec-proven
     * reference).
     */
-  def shingles(toks: Column, n: Int): Column = {
-    graft.functions.ShingleArray.register(
-      org.apache.spark.sql.SparkSession.active)
-    call_function("shingle_array", toks, lit(n))
-  }
+  def shingles(toks: Column, n: Int): Column =
+    column(ShingleArray(expression(toks), n))
 
   /** The same shingling as built-in higher-order functions — the
     * interpreted reference ShingleArray is spec-proven against (the

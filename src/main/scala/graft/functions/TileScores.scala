@@ -86,12 +86,3 @@ case class TileScores(child: Expression, b: Int) extends UnaryExpression {
   override protected def withNewChildInternal(newChild: Expression): TileScores =
     copy(child = newChild)
 }
-
-object TileScores {
-  def register(spark: org.apache.spark.sql.SparkSession, b: Int): String = {
-    val name = s"tile_scores_$b"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => TileScores(exprs.head, b), "built-in")
-    name
-  }
-}

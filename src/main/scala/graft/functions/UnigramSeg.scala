@@ -115,21 +115,3 @@ case class UnigramSeg(child: Expression,
   override protected def withNewChildInternal(newChild: Expression): UnigramSeg =
     copy(child = newChild)
 }
-
-object UnigramSeg {
-  /** Register a fitted segmenter; the name carries a digest of the fitted
-    * state (the Bm25Scores/PercolateScores discipline —
-    * createOrReplaceTempFunction is last-writer-wins, so differently-fitted
-    * models must land on distinct names).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession,
-               pieces: Seq[(String, Long)], maxLen: Int, unkLp: Long): String = {
-    val digest = (pieces.foldLeft(17L) { case (h, (p, lp)) =>
-      (h * 31 + p.hashCode) * 31 + lp
-    } * 31 + maxLen * 31 + unkLp) & Long.MaxValue
-    val name = s"unigram_seg_${pieces.length}_$digest"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => UnigramSeg(exprs.head, pieces, maxLen, unkLp), "built-in")
-    name
-  }
-}

@@ -73,14 +73,6 @@ case class DotProd(left: Expression, right: Expression) extends BinaryExpression
     copy(left = newLeft, right = newRight)
 }
 
-object DotProd {
-  def register(spark: org.apache.spark.sql.SparkSession): String = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_prod", exprs => DotProd(exprs(0), exprs(1)), "built-in")
-    "dot_prod"
-  }
-}
-
 /** Codegen'd squared Euclidean distance over a 1-based slice of two double
   * arrays, rounded to 6 decimals.
   *
@@ -176,13 +168,4 @@ case class SliceL2(a: Expression, b: Expression,
       newChildren: IndexedSeq[Expression]): SliceL2 =
     copy(a = newChildren(0), b = newChildren(1),
       start = newChildren(2), len = newChildren(3))
-}
-
-object SliceL2 {
-  def register(spark: org.apache.spark.sql.SparkSession): String = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "slice_l2", exprs => SliceL2(exprs(0), exprs(1), exprs(2), exprs(3)),
-      "built-in")
-    "slice_l2"
-  }
 }

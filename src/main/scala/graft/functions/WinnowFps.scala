@@ -92,39 +92,4 @@ object WinnowFps {
     while (it.hasNext) { out(i) = it.next(); i += 1 }
     new GenericArrayData(out)
   }
-
-  /** Register `winnow_fps(text, k, w)` in a session's function registry.
-    * k and w parameterize the expression itself (they shape the per-row
-    * loop, not per-row data), so the builder requires foldable integer
-    * literals and raises an AnalysisException — not a raw cast failure —
-    * when handed anything else.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    def intLit(e: Expression, name: String): Int = e match {
-      case lit if lit.foldable && lit.dataType == org.apache.spark.sql.types.IntegerType =>
-        lit.eval(null) match {
-          case i: java.lang.Integer => i.intValue()
-          case _ => throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "USER_RAISED_EXCEPTION",
-            messageParameters = Map("errorMessage" ->
-              s"winnow_fps: argument '$name' must be a non-null integer literal"),
-            cause = None)
-        }
-      case other => throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "USER_RAISED_EXCEPTION",
-        messageParameters = Map("errorMessage" ->
-          (s"winnow_fps: argument '$name' must be a foldable INT literal, " +
-            s"got ${other.dataType.catalogString} (foldable=${other.foldable})")),
-        cause = None)
-    }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_fps", exprs => {
-        if (exprs.length != 3) throw new org.apache.spark.sql.AnalysisException(
-          errorClass = "USER_RAISED_EXCEPTION",
-          messageParameters = Map("errorMessage" ->
-            s"winnow_fps expects (text, k, w) — 3 arguments, got ${exprs.length}"),
-          cause = None)
-        WinnowFps(exprs.head, intLit(exprs(1), "k"), intLit(exprs(2), "w"))
-      }, "built-in")
-  }
 }

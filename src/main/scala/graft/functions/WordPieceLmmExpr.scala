@@ -124,17 +124,3 @@ case class WordPieceLmm(child: Expression,
   override protected def withNewChildInternal(newChild: Expression): WordPieceLmm =
     copy(child = newChild)
 }
-
-object WordPieceLmm {
-  /** Registered under a piece-set-content name (the BpeStats discipline). */
-  def register(spark: org.apache.spark.sql.SparkSession,
-               headPieces: Seq[String], contPieces: Seq[String]): String = {
-    val name = "wordpiece_lmm_" +
-      s"${headPieces.size}_${contPieces.size}_" +
-      (headPieces, contPieces).hashCode.toHexString
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => WordPieceLmm(exprs.head, headPieces, contPieces),
-      "built-in")
-    name
-  }
-}

@@ -111,16 +111,3 @@ case class WordPieceStats(child: Expression, merges: Seq[(String, String)])
   override protected def withNewChildInternal(newChild: Expression): WordPieceStats =
     copy(child = newChild)
 }
-
-object WordPieceStats {
-  /** Registered under a merge-table-content name (the BpeStats
-    * discipline) so the builder can close over the table.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession,
-               merges: Seq[(String, String)]): String = {
-    val name = s"wordpiece_stats_${merges.hashCode.toHexString}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => WordPieceStats(exprs.head, merges), "built-in")
-    name
-  }
-}

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
@@ -284,12 +285,11 @@ object Bpe {
     * pick for the streaming tokenize gate; [[tokenStats]] stays as the
     * independently-derived reference the spec compares against.
     */
-  def tokenStatsFast(spark: org.apache.spark.sql.SparkSession,
-                     textCol: Column,
+  def tokenStatsFast(textCol: Column,
                      merges: Seq[(Int, String, String, Long)]): Column = {
     val table = merges.sortBy(_._1).map { case (_, l, r, _) => (l, r) }
-    val fn = graft.functions.BpeStats.register(spark, table)
-    call_function(fn, filter(Text.tokens(textCol), w => w =!= ""))
+    column(graft.functions.BpeStats(
+      expression(filter(Text.tokens(textCol), w => w =!= "")), table))
   }
 
   /** [[merges]] as a DataFrame for the gated query/bench surface. */

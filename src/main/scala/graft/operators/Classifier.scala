@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
@@ -344,12 +345,10 @@ object Classifier {
   def probExpr(text: Column, w: Array[Double], buckets: Int): Column = {
     require(w.length == buckets + 1,
       s"weight vector must have buckets+1 entries, got ${w.length} for $buckets")
-    graft.functions.ClsProbFold.register(
-      org.apache.spark.sql.SparkSession.active)
     // 6-decimal weights are exact in integer micros
     val micros = w.map(v => math.round(v * 1e6))
-    call_function("cls_prob_fold", Text.tokens(text),
-      array(micros.map(lit(_)): _*))
+    column(graft.functions.ClsProbFold(expression(Text.tokens(text)),
+      expression(array(micros.map(lit(_)): _*))))
   }
 
   /** The same probability as built-in higher-order folds — the interpreted

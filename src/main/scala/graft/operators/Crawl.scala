@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -67,9 +68,7 @@ object Crawl {
     * DuckDB oracle runs (HtmlTextSpec property-pins the equality).
     */
   def htmlText(html: Column): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      graft.functions.HtmlVisibleText(
-        org.apache.spark.sql.GraftColumnBridge.expression(html)))
+    column(graft.functions.HtmlVisibleText(expression(html)))
 
   /** The regex-chain form of [[htmlText]] — the executable spec both the
     * oracle SQL (QueriesCrawl.extractChainSql) and the native scanner are
@@ -337,10 +336,7 @@ object Crawl {
 
   /** Codegen'd kept-lines join (see functions/LineRebuild). */
   private def rebuildLines(lines: Column, drop: Column): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      graft.functions.LineRebuild(
-        org.apache.spark.sql.GraftColumnBridge.expression(lines),
-        org.apache.spark.sql.GraftColumnBridge.expression(drop)))
+    column(graft.functions.LineRebuild(expression(lines), expression(drop)))
 
   /** The HOF formulation of [[rebuildLines]] — the executable reference
     * CrawlSpec property-pins [[graft.functions.LineRebuild]] against. Not
@@ -425,21 +421,20 @@ object Crawl {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
-  /** Drive an iterated-rounds result eagerly (one localCheckpoint action —
-    * the rounds' lazy checkpoints materialize through it), then drop the
-    * loop-invariant pinned frames so no cache outlives the operator call.
-    * The caller gets an RDD-backed frame; results are unchanged, only the
-    * moment of computation moves inside the operator — which is where the
-    * pinned frames' lifetime must end.
+  /** Build the iterated rounds and drive the result eagerly (one
+    * localCheckpoint action — the rounds' lazy checkpoints materialize
+    * through it), then drop the loop-invariant pinned frames so no cache
+    * outlives the operator call, also when a round fails (under AQE even a
+    * lazy round checkpoint runs its stages). The caller gets an RDD-backed
+    * frame; results are unchanged, only the moment of computation moves
+    * inside the operator — which is where the pinned frames' lifetime must
+    * end.
     */
-  private def finishRounds(result: DataFrame,
-                           pinned: DataFrame*): DataFrame = {
-    val out = result.localCheckpoint(eager = true)
+  private def finishRounds(pinned: DataFrame*)(rounds: => DataFrame): DataFrame =
+    try rounds.localCheckpoint(eager = true)
     // blocking: the cleanup belongs to THIS operator call, not to whatever
     // the caller times next
-    pinned.foreach(_.unpersist(blocking = true))
-    out
-  }
+    finally pinned.foreach(_.unpersist(blocking = true))
 
   /** Bounded take of the host edge list: Some(edges) when the graph fits
     * the driver ceiling, None when it doesn't (or the gate is disabled).
@@ -502,20 +497,22 @@ object Crawl {
         .unionByName(e.select(col("dst_host").as("host")))
         .distinct(),
       "host")
-    var ranks = hosts.select(col("host"), lit(initMicros).as("rank_micros"))
-    for (_ <- 1 to iters) {
-      val inflow = e.join(ranks, col("src_host") === col("host"))
-        .selectExpr("dst_host", "rank_micros * weight div out_w AS contrib")
-        .groupBy(col("dst_host")).agg(sum(col("contrib")).as("inflow"))
-      ranks = hosts
-        .join(inflow, col("host") === col("dst_host"), "left")
-        .select(col("host"), coalesce(col("inflow"), lit(0L)).as("inflow"))
-        .selectExpr("host",
-          s"CAST($baseMicros + ($dampNum * inflow div $dampDen) AS BIGINT)" +
-            " AS rank_micros")
-        .localCheckpoint(eager = false)
+    finishRounds(e, hosts) {
+      var ranks = hosts.select(col("host"), lit(initMicros).as("rank_micros"))
+      for (_ <- 1 to iters) {
+        val inflow = e.join(ranks, col("src_host") === col("host"))
+          .selectExpr("dst_host", "rank_micros * weight div out_w AS contrib")
+          .groupBy(col("dst_host")).agg(sum(col("contrib")).as("inflow"))
+        ranks = hosts
+          .join(inflow, col("host") === col("dst_host"), "left")
+          .select(col("host"), coalesce(col("inflow"), lit(0L)).as("inflow"))
+          .selectExpr("host",
+            s"CAST($baseMicros + ($dampNum * inflow div $dampDen) AS BIGINT)" +
+              " AS rank_micros")
+          .localCheckpoint(eager = false)
+      }
+      ranks
     }
-    finishRounds(ranks, e, hosts)
   }
 
   /** HITS hubs & authorities over the weighted host graph — the second

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
@@ -201,11 +202,8 @@ object Curation {
     */
   def bloomFlags(text: Column, bitmap: Array[Long], n: Int,
                  numHashes: Int): Column = {
-    graft.functions.BloomNgramHits.register(
-      org.apache.spark.sql.SparkSession.active)
-    call_function("bloom_ngram_hits",
-      Text.tokens(text), array(bitmap.map(lit(_)): _*), lit(n),
-      lit(numHashes))
+    column(graft.functions.BloomNgramHits(expression(Text.tokens(text)),
+      expression(array(bitmap.map(lit(_)): _*)), n, numHashes))
   }
 
   /** The Bloom probe as built-in higher-order folds — the interpreted
@@ -342,7 +340,7 @@ object Curation {
       // round(aggregate(zip_with(...)), 6) chain it replaced: same
       // sequential fold, same HALF_UP round; the assignment pass runs
       // n×k of these per k-means round
-      val d2 = call_function("slice_l2", col("v"), carr, lit(1), lit(c.length))
+      val d2 = Similarity.sliceL2(col("v"), carr, 1, c.length)
       struct(d2.as("dist"), lit(i).as("cluster"))
     }
 
@@ -463,14 +461,11 @@ object Curation {
     * CurationSpec property-pins equality against.
     */
   def spanCorrupt(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val expr = graft.functions.SpanCorruptExpr(
-      org.apache.spark.sql.GraftColumnBridge.expression(
-        col(idCol).cast("string")),
-      org.apache.spark.sql.GraftColumnBridge.expression(
-        graft.functions.Text.tokens(col(textCol))),
-      SpanBlock, SpanGateSeed, SpanOffSeed, SpanLenSeed)
-    docs.select(col(idCol),
-      org.apache.spark.sql.GraftColumnBridge.column(expr).as("__sc"))
+    val sc = column(graft.functions.SpanCorruptExpr(
+      expression(col(idCol).cast("string")),
+      expression(graft.functions.Text.tokens(col(textCol))),
+      SpanBlock, SpanGateSeed, SpanOffSeed, SpanLenSeed))
+    docs.select(col(idCol), sc.as("__sc"))
       .select(col(idCol),
         col("__sc.n_tokens").as("n_tokens"),
         col("__sc.n_spans").as("n_spans"),
@@ -537,7 +532,6 @@ object Curation {
     */
   def assignTo(df: DataFrame, idCol: String, vecCol: String,
                centroids: Seq[(Int, Array[Double])]): DataFrame = {
-    graft.functions.SliceL2.register(df.sparkSession)
     val v = df.select(col(idCol).as("vec_id"),
       Similarity.toDouble(col(vecCol)).as("v"))
     assign(v, centroids).drop("v")
@@ -550,7 +544,6 @@ object Curation {
   def kmeansCentroids(df: DataFrame, idCol: String, vecCol: String, k: Int,
                       iters: Int): Seq[(Int, Array[Double])] = {
     require(k > 0 && iters >= 0, "k-means needs k > 0, iters >= 0")
-    graft.functions.SliceL2.register(df.sparkSession) // distStructs' core
     val v = df.select(col(idCol).as("vec_id"),
       Similarity.toDouble(col(vecCol)).as("v"))
     var centroids: Seq[(Int, Array[Double])] = v.orderBy(col("vec_id")).limit(k)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
@@ -207,6 +208,26 @@ object Dedup {
   private[graft] def bandHash(sl: Column): Column =
     aggregate(sl, lit(0L), (acc, h) => (acc * 31L + h) % BandFoldPrime)
 
+  /** The band keys of a signature column: the codegen'd
+    * [[graft.functions.BandFold]] (spec-proven equal to the [[bandHash]]
+    * fold over each `rowsPerBand` slice).
+    */
+  private[graft] def bandFold(sig: Column, bands: Int, rowsPerBand: Int): Column =
+    column(graft.functions.BandFold(expression(sig), bands, rowsPerBand,
+      BandFoldPrime))
+
+  /** Distinct word n-grams of a token array (codegen'd ShingleJoin). */
+  private[graft] def shingleSet(toks: Column, shingleSize: Int): Column =
+    column(graft.functions.ShingleJoin(expression(toks), shingleSize))
+
+  /** Minhash signature of a shingle set: portable base hashes mod p
+    * (PortableHashArr) folded by the codegen'd MinhashSig.
+    */
+  private[graft] def signature(sh: Column, numPerm: Int): Column =
+    column(graft.functions.MinhashSig(
+      graft.functions.PortableHashArr(expression(sh), MersennePrime),
+      permParams(numPerm), MersennePrime))
+
   /** Banded LSH candidate pairs from a signed corpus: (band_id, fold-hash of
     * the band's slice) buckets; docs sharing a bucket become candidate pairs.
     * Returns (id_a, id_b) with id_a < id_b, distinct. Band keys via the
@@ -215,10 +236,8 @@ object Dedup {
     */
   def minhashCandidates(signed: DataFrame, idCol: String, sigCol: String,
                         bands: Int, rowsPerBand: Int): DataFrame = {
-    val foldFn = graft.functions.BandFold.register(signed.sparkSession,
-      bands, rowsPerBand, BandFoldPrime)
     val banded = signed.select(col(idCol),
-      posexplode(call_function(foldFn, col(sigCol)))
+      posexplode(bandFold(col(sigCol), bands, rowsPerBand))
         .as(Seq("band", "band_hash")))
     val l = banded.as("l")
     val r = banded.as("r")
@@ -247,15 +266,9 @@ object Dedup {
   private[graft] def signedShingles(df: DataFrame, textCol: String,
                                     idCol: String, shingleSize: Int,
                                     numPerm: Int): DataFrame = {
-    val spark = df.sparkSession
-    val shingleFn = graft.functions.ShingleJoin.register(spark, shingleSize)
-    val hashFn = graft.functions.PortableHashArr.register(spark, MersennePrime)
-    val sigFn = graft.functions.MinhashSig.register(spark,
-      permParams(numPerm), MersennePrime)
     df.select(col(idCol),
-      call_function(shingleFn, Text.tokens(col(textCol))).as("sh"))
-      .withColumn("sig", call_function(sigFn,
-        call_function(hashFn, col("sh"))))
+      shingleSet(Text.tokens(col(textCol)), shingleSize).as("sh"))
+      .withColumn("sig", signature(col("sh"), numPerm))
       .localCheckpoint(eager = false)
   }
 
@@ -347,13 +360,10 @@ object Dedup {
           "force a corpus-wide shuffle join — pre-aggregate or split the " +
           "benchmark, or raise maxBenchmarkDocs explicitly")
     val rows = numPerm / bands
-    val spark = corpus.sparkSession
     val cb = signedShingles(corpus, textCol, idCol, shingleSize, numPerm)
     val bb = signedShingles(benchmark, textCol, idCol, shingleSize, numPerm)
-    val foldFn = graft.functions.BandFold.register(spark, bands, rows,
-      BandFoldPrime)
     def banded(f: DataFrame, as: String) = f.select(col(idCol).as(as),
-      posexplode(call_function(foldFn, col("sig")))
+      posexplode(bandFold(col("sig"), bands, rows))
         .as(Seq("band", "band_hash")))
     val cands = banded(cb, "corpus_id")
       .join(broadcast(banded(bb, "bench_id")), Seq("band", "band_hash"))

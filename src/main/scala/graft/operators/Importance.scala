@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
@@ -57,15 +58,14 @@ object Importance {
     // hex/conv string path; the former shape paid ~5 corpus explodes,
     // each re-hashing every token). The collected state is `buckets`
     // count pairs — metadata-scale, the kmeans-centroids discipline.
-    val spark = df.sparkSession
-    val hashFn = graft.functions.PortableHashArr.register(spark, buckets.toLong)
     val toks = Text.tokens(col(textCol))
     // the target flag lives INSIDE the generator input (target docs emit
     // every bucket a second time, offset into [buckets, 2*buckets)), so
     // the predicate evaluates once per DOC — a flag column projected
     // beside the Generate would be hoisted above it and re-evaluated per
     // TOKEN row (see [[bucketed]]'s measured 25 s -> 209 s trap)
-    val arr = call_function(hashFn, toks)
+    val arr = column(graft.functions.PortableHashArr(expression(toks),
+      buckets.toLong))
     val tagged = when(targetPred,
       concat(arr, transform(arr, h => h + buckets))).otherwise(arr)
     val cells = df
@@ -166,13 +166,11 @@ object Importance {
     * the shape that scores a crawl at ingest.
     */
   def dsirScoreExpr(text: Column, lr: Array[Double]): Column = {
-    graft.functions.DsirFold.register(
-      org.apache.spark.sql.SparkSession.active)
     // model micros are exact: lr values are 6-decimal-rounded, so the
     // nearest long of v*1e6 recovers the decimal exactly
     val micros = lr.map(v => math.round(v * 1e6))
-    call_function("dsir_fold", Text.tokens(text),
-      array(micros.map(lit(_)): _*))
+    column(graft.functions.DsirFold(expression(Text.tokens(text)),
+      expression(array(micros.map(lit(_)): _*))))
   }
 
   /** The same score as a built-in higher-order fold — the interpreted

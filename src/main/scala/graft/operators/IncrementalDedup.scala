@@ -204,11 +204,9 @@ object IncrementalDedup {
     // band keys bucket-join the STORED signatures; degree bounded by bucket
     // size, the corpus never re-signs
     val rows = params.numPerm / params.bands
-    val foldFn = graft.functions.BandFold.register(spark, params.bands, rows,
-      Dedup.BandFoldPrime)
     def banded(f: DataFrame, as: String): DataFrame =
       f.select(col(idCol).as(as),
-        posexplode(call_function(foldFn, col("sig")))
+        posexplode(Dedup.bandFold(col("sig"), params.bands, rows))
           .as(Seq("band", "band_hash")))
     val within = Dedup.minhashCandidates(mySigs.select(col(idCol), col("sig")),
       idCol, "sig", params.bands, rows)
@@ -281,10 +279,8 @@ object IncrementalDedup {
       spark.read.parquet(gens.map(g => dir(indexDir, kind, g).toString): _*)
     val digests = read("reps").select(col("__d").as("key"))
     val rows = m.params.numPerm / m.params.bands
-    val foldFn = graft.functions.BandFold.register(spark, m.params.bands,
-      rows, Dedup.BandFoldPrime)
     val bandKeys = read("signatures")
-      .select(posexplode(call_function(foldFn, col("sig")))
+      .select(posexplode(Dedup.bandFold(col("sig"), m.params.bands, rows))
         .as(Seq("band", "bh")))
       .select(concat(col("band").cast("string"), lit(":"),
         col("bh").cast("string")).as("key"))

@@ -2,7 +2,7 @@ package graft.operators
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -79,11 +79,6 @@ object IncrementalSemanticDedup {
   private def dir(indexDir: Path, kind: String, gen: Int): Path =
     indexDir.resolve(kind).resolve(s"gen=$gen")
 
-  private def dotF(a: Column, b: Column): Column =
-    call_function("dot_prod", a, b)
-  private def cosineF(a: Column, b: Column): Column =
-    dotF(a, b) / (sqrt(dotF(a, a)) * sqrt(dotF(b, b)))
-
   // ---------------------------------------------------------------- meta io
 
   private def saveMeta(indexDir: Path, m: Meta): Unit = {
@@ -157,7 +152,6 @@ object IncrementalSemanticDedup {
                      increment: DataFrame, vecCol: String, idCol: String,
                      genKey: String, params: Params,
                      meta: Option[Meta]): UpdateReport = {
-    graft.functions.DotProd.register(spark)
     val gen = meta.map(_.gens.map(_.gen).max + 1).getOrElse(1)
     val storedGens = meta.map(_.gens.map(_.gen)).getOrElse(Nil)
     def storedUnion(kind: String): Option[DataFrame] = storedGens match {
@@ -173,7 +167,7 @@ object IncrementalSemanticDedup {
     val inc = increment.select(col(idCol),
       Similarity.toDouble(col(vecCol)).as("__v"))
       .withColumn("__vd", sha2(concat_ws(",", col("__v").cast("array<string>")), 256))
-      .withColumn("__ok", dotF(col("__v"), col("__v")) > 0.0)
+      .withColumn("__ok", Similarity.dotF(col("__v"), col("__v")) > 0.0)
       .localCheckpoint(eager = false)
 
     // LEVEL 1: vectors whose value the index already knows become
@@ -215,7 +209,7 @@ object IncrementalSemanticDedup {
     def side(f: DataFrame, as: String): DataFrame =
       f.select(col(idCol).as(s"id_$as"), col("v").as(s"v$as"), col("b"))
     def verified(pairs: DataFrame): DataFrame = pairs
-      .where(cosineF(col("va"), col("vb")) >= params.threshold)
+      .where(Similarity.cosineF(col("va"), col("vb")) >= params.threshold)
       .select(least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"))
     val within = verified(

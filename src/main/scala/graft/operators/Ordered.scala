@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
@@ -76,11 +77,8 @@ object Ordered {
       // gate is the survivor count, and the ≤window doubles sort in the
       // projection (functions/RollingMedianExpr.scala; OrderedSpec pins
       // equality with the collect_list shape).
-      val probes = (0 until window).map(i =>
-        org.apache.spark.sql.GraftColumnBridge.expression(
-          lag(v, i).over(key.w)))
-      return df.withColumn(to, org.apache.spark.sql.GraftColumnBridge.column(
-        graft.functions.RollingMedianK(probes, minS)))
+      val probes = (0 until window).map(i => expression(lag(v, i).over(key.w)))
+      return df.withColumn(to, column(graft.functions.RollingMedianK(probes, minS)))
     }
     val samples = count(v).over(frame)
     val stat: Column = statistic match {

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
 
 /** Sparse-retrieval / fingerprinting operators for corpus mining
@@ -33,9 +34,9 @@ object Retrieval {
   def winnowFingerprints(df: DataFrame, idCol: String, textCol: String,
                          k: Int, w: Int): DataFrame = {
     require(k >= 2 && w >= 1, s"winnow: need k >= 2, w >= 1, got k=$k w=$w")
-    graft.functions.WinnowFps.register(df.sparkSession)
     df.select(col(idCol),
-      expr(s"winnow_fps(lower($textCol), $k, $w)").as("fps"))
+      column(graft.functions.WinnowFps(expression(lower(col(textCol))), k, w))
+        .as("fps"))
   }
 
   // --- percolation (standing-query routing) -------------------------------
@@ -100,12 +101,11 @@ object Retrieval {
     * matched idf mass reaches `frac` of their total mass; explode drops
     * rows with no alerts.
     */
-  def percolateAlerts(spark: org.apache.spark.sql.SparkSession,
-                      textCol: Column,
+  def percolateAlerts(textCol: Column,
                       queries: Seq[(Long, Seq[(String, Double)], Double)],
                       frac: Double): Column = {
-    val fn = graft.functions.PercolateScores.register(spark, queries)
-    val scores = call_function(fn, graft.functions.Text.tokens(textCol))
+    val scores = column(graft.functions.PercolateScores(
+      expression(graft.functions.Text.tokens(textCol)), queries))
     // per-query literal gate: qid + the same IEEE `frac * total` product
     // the batch plan computes at runtime
     val qmeta = array(queries.map { case (qid, _, total) =>
@@ -134,7 +134,7 @@ object Retrieval {
     val fitted = collectStandingQueries(percolatorFit(docs, qCap))
     docs.where(col("doc_id") >= qCap)
       .select(col("doc_id"),
-        explode(percolateAlerts(docs.sparkSession, col("text"), fitted, frac))
+        explode(percolateAlerts(col("text"), fitted, frac))
           .as("a"))
       .select(col("doc_id"), col("a.qid").as("qid"),
         col("a.score").as("score"))

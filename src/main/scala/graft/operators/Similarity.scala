@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -35,16 +36,18 @@ object Similarity {
 
   /** Codegen'd twins (functions.DotProd): bit-identical to [[dot]]/[[cosine]]
     * (same sequential fold order), ~20x faster on the pair-scoring hot path.
-    * Callers with a DataFrame in hand register the function first.
     */
-  private def registerFast(df: DataFrame): Unit = {
-    graft.functions.DotProd.register(df.sparkSession)
-    graft.functions.SliceL2.register(df.sparkSession)
-  }
+  private[graft] def dotF(a: Column, b: Column): Column =
+    column(graft.functions.DotProd(expression(a), expression(b)))
 
-  private def dotF(a: Column, b: Column): Column = call_function("dot_prod", a, b)
+  /** Codegen'd squared L2 over the 1-based slice [start, start+len) of two
+    * double arrays, rounded to 6 decimals (functions.SliceL2).
+    */
+  private[graft] def sliceL2(a: Column, b: Column, start: Int, len: Int): Column =
+    column(graft.functions.SliceL2(expression(a), expression(b),
+      expression(lit(start)), expression(lit(len))))
 
-  private def cosineF(a: Column, b: Column): Column =
+  private[graft] def cosineF(a: Column, b: Column): Column =
     dotF(a, b) / (sqrt(dotF(a, a)) * sqrt(dotF(b, b)))
 
   /** Zero vectors have no direction: cosine against anything is 0/0 — an
@@ -69,7 +72,6 @@ object Similarity {
     */
   def annBruteForce(queries: DataFrame, corpus: DataFrame, idCol: String,
                     vecCol: String, k: Int): DataFrame = {
-    registerFast(corpus)
     val q = queries.select(col(idCol).as("query_id"), toDouble(col(vecCol)).as("qv"))
       .where(nonZero(col("qv")))
     val c = corpus.select(col(idCol).as("neighbor_id"), toDouble(col(vecCol)).as("cv"))
@@ -93,7 +95,6 @@ object Similarity {
                        vecCol: String, k: Int): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    registerFast(corpus)
     val q = queries.select(col(idCol).as("query_id"), toDouble(col(vecCol)).as("qv"))
       .where(nonZero(col("qv")))
     val c = corpus.select(col(idCol).as("neighbor_id"), toDouble(col(vecCol)).as("cv"))
@@ -127,7 +128,6 @@ object Similarity {
     */
   def hardNegatives(queries: DataFrame, corpus: DataFrame, idCol: String,
                     vecCol: String, dupThreshold: Double): DataFrame = {
-    registerFast(corpus)
     val q = queries.select(col(idCol).as("query_id"),
       toDouble(col(vecCol)).as("qv")).where(nonZero(col("qv")))
     val c = corpus.select(col(idCol).as("neg_id"),
@@ -180,7 +180,6 @@ object Similarity {
     */
   def annLsh(queries: DataFrame, corpus: DataFrame, idCol: String,
              vecCol: String, k: Int, planes: Int, dim: Int): DataFrame = {
-    registerFast(corpus)
     val sig = lshSignature(col(vecCol), planes, dim)
     val q = queries.select(col(idCol).as("query_id"),
       toDouble(col(vecCol)).as("qv"), sig.as("bucket"))
@@ -239,7 +238,6 @@ object Similarity {
              statsCache: Option[java.nio.file.Path] = None,
              maxCentroids: Long = 4096L,
              collapse: Option[Boolean] = None): DataFrame = {
-    registerFast(corpus)
     val n = statsCache match {
       case Some(dir) => graft.pipeline.ArtifactCache.cachedCount(corpus, dir)
       case None      => corpus.count()
@@ -345,7 +343,6 @@ object Similarity {
   def annIvfTrained(queries: DataFrame, corpus: DataFrame, idCol: String,
                     vecCol: String, k: Int, kCentroids: Int, iters: Int,
                     nprobe: Int): DataFrame = {
-    registerFast(corpus)
     val cents = Curation.kmeansCentroids(corpus, idCol, vecCol, kCentroids,
       iters)
     val c = corpus.select(col(idCol).as("vec_id"),
@@ -397,7 +394,6 @@ object Similarity {
                        planes: Int, dim: Int, threshold: Double,
                        statsCache: Option[java.nio.file.Path] = None,
                        collapse: Option[Boolean] = None): DataFrame = {
-    registerFast(df)
     val n = statsCache match {
       case Some(dir) => graft.pipeline.ArtifactCache.cachedCount(df, dir)
       case None      => df.count()
@@ -497,7 +493,6 @@ object Similarity {
           s"over the $maxBenchmarkDocs broadcast budget; a benchmark this " +
           "large would force a corpus-wide shuffle join — split the " +
           "benchmark or raise maxBenchmarkDocs explicitly")
-    registerFast(corpus)
     val c = corpus
       .select(col(idCol).as("corpus_id"), toDouble(col(vecCol)).as("__v"))
       .where(nonZero(col("__v")))
@@ -534,7 +529,6 @@ object Similarity {
       .select(col("id_a"), col("va"),
         explode(sequence(col("id_a") + 1, col("id_a") + lookahead)).as("id_b"))
     val b = df.select(col(idCol).as("id_b"), toDouble(col(vecCol)).as("vb"))
-    registerFast(df)
     a.join(b, Seq("id_b")) // equi-join: scalable pair generation, no BNLJ
       .withColumn("cos", cosineF(col("va"), col("vb")))
       .select(col("id_a"), col("id_b"), col("cos"),
@@ -566,7 +560,6 @@ object Similarity {
             vecCol: String, k: Int, dim: Int = 64, m: Int = 8,
             ks: Int = 16): DataFrame = {
     require(dim % m == 0, s"annPq: dim $dim must split into $m subspaces")
-    registerFast(corpus) // slice_l2 backs the subspace distances
     val n = corpus.count() // metadata-scale, like annIvf's stride count
     val stride = math.max(1L, n / ks)
     val cb = corpus
@@ -583,7 +576,7 @@ object Similarity {
     // sequential adds, HALF_UP round 6) — the slice+zip_with+aggregate
     // chain is interpreted and dominated the encode/LUT crosses
     def subD(a: Column, b: Column, mIdx: Int, dSub: Int): Column =
-      call_function("slice_l2", a, b, lit(mIdx * dSub + 1), lit(dSub))
+      sliceL2(a, b, mIdx * dSub + 1, dSub)
     val dSub = dim / m
     // encode: per-subspace argmin over the broadcast codebook, all m
     // subspaces collapsed in ONE aggregate — one shuffled row per vector
@@ -644,7 +637,6 @@ object Similarity {
                vecCol: String, k: Int, dim: Int = 64, m: Int = 8,
                ks: Int = 16, kc: Int = 8, nprobe: Int = 2): DataFrame = {
     require(dim % m == 0, s"annIvfPq: dim $dim must split into $m subspaces")
-    registerFast(corpus) // slice_l2 backs the subspace distances
     val n = corpus.count() // metadata-scale, the annIvf stride count
     val cStride = math.max(1L, n / kc)
     val v = corpus.select(col(idCol).as("vec_id"),
@@ -678,7 +670,7 @@ object Similarity {
     // codegen'd subspace squared L2 — bit-identical to the HOF fold (see
     // annPq's subD note)
     def subD(a: Column, b: Column, mIdx: Int): Column =
-      call_function("slice_l2", a, b, lit(mIdx * dSub + 1), lit(dSub))
+      sliceL2(a, b, mIdx * dSub + 1, dSub)
     // encode: per-subspace argmin over the broadcast codebook, all m
     // subspaces collapsed in ONE aggregate — one shuffled row per vector
     val codeAggs = (0 until m).map { mi =>

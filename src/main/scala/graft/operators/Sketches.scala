@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
 
 /** Approximate sketches for cardinality/quantiles at scale (SURVEY.md §2.5
@@ -79,9 +80,7 @@ object Sketches {
 
   /** All h sketch positions of a token column as `array<long>`. */
   def cmsPositions(tok: Column, h: Int, w: Long): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      graft.functions.CmsPositions(
-        org.apache.spark.sql.GraftColumnBridge.expression(tok), h, w))
+    column(graft.functions.CmsPositions(expression(tok), h, w))
 
   /** SQL twin of row `h`'s position in [[cmsPositions]]. */
   def cmsPosSql(h: Int, e: String, w: Long): String =

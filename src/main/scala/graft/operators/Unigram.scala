@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Text, UnigramSeg}
@@ -102,6 +103,12 @@ object Unigram {
     counts.map { case (p, c) => (p, lnMicros((c + 1).toDouble / t)) }
   }
 
+  /** Viterbi segmentation of a word column under fitted log-probs
+    * (codegen'd [[UnigramSeg]]).
+    */
+  private[graft] def segment(word: Column, pieceLps: Seq[(String, Long)]): Column =
+    column(UnigramSeg(expression(word), pieceLps, MaxPieceLen, UnkLpMicros))
+
   /** A trained tokenizer: the per-round count trajectory (rnd 0 = candidate
     * frequencies; rnd i = round i's Viterbi piece counts over the FULL
     * candidate set, zeros included) plus the final counts — the portable
@@ -112,7 +119,6 @@ object Unigram {
 
   def train(df: DataFrame, textCol: String, rounds: Int = EmRounds): Model = {
     require(rounds > 0, s"unigram: rounds must be > 0, got $rounds")
-    val spark = df.sparkSession
     val vocab = wordFreq(df, textCol)
     val v0 = candidateSet(vocab)
     var counts = v0
@@ -120,10 +126,8 @@ object Unigram {
     traj ++= counts.map { case (p, c) => (0, p, c) }
     var rnd = 1
     while (rnd <= rounds) {
-      val fn = UnigramSeg.register(spark, logProbs(counts), MaxPieceLen,
-        UnkLpMicros)
       val segCounts = vocab
-        .select(col("n"), explode(call_function(fn, col("w"))).as("piece"))
+        .select(col("n"), explode(segment(col("w"), logProbs(counts))).as("piece"))
         .groupBy(col("piece")).agg(sum(col("n")).as("cnt"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       counts = v0.map { case (p, _) => (p, segCounts.getOrElse(p, 0L)) }
@@ -194,12 +198,9 @@ object Unigram {
     */
   def encodeStatsWith(df: DataFrame, idCol: String, textCol: String,
                       pieces: Seq[(String, Long)]): DataFrame = {
-    val spark = df.sparkSession
-    val fn = UnigramSeg.register(spark, logProbs(pieces), MaxPieceLen,
-      UnkLpMicros)
     val tokMap = wordFreq(df, textCol)
       .select(col("w"),
-        size(call_function(fn, col("w"))).cast("long").as("wpieces"))
+        size(segment(col("w"), logProbs(pieces))).cast("long").as("wpieces"))
     val tf = df
       .select(col(idCol), explode(Text.tokens(col(textCol))).as("w"))
       .where(col("w") =!= "")

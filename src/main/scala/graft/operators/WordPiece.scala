@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
@@ -232,13 +233,11 @@ object WordPiece {
     * it). The ConfigRuntime `tokenize` step's streaming path for
     * `family: wordpiece`.
     */
-  def tokenStatsFast(spark: org.apache.spark.sql.SparkSession,
-                     textCol: org.apache.spark.sql.Column,
-                     merges: Seq[(Int, String, String, Long, Long, Long)])
-      : org.apache.spark.sql.Column = {
+  def tokenStatsFast(textCol: Column,
+                     merges: Seq[(Int, String, String, Long, Long, Long)]): Column = {
     val table = merges.sortBy(_._1).map { case (_, l, r, _, _, _) => (l, r) }
-    val fn = graft.functions.WordPieceStats.register(spark, table)
-    call_function(fn, filter(Text.tokens(textCol), w => w =!= ""))
+    column(graft.functions.WordPieceStats(
+      expression(filter(Text.tokens(textCol), w => w =!= "")), table))
   }
 
   /** Train `rounds` WordPiece merges; stops early when no pair remains. */

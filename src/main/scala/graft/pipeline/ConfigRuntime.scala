@@ -600,8 +600,11 @@ object ConfigRuntime {
                 }
               Bpe.encodeStatsWith(snap, c.idCol, c.textCol, merges)
           }
-          snap.join(encoded, Seq(c.idCol), "left")
-            .na.fill(0L, Seq("n_words", "n_chars", "n_tokens"))
+          // the step's counts replace any the source already carries, as
+          // the streaming path's withColumn does
+          val counts = Seq("n_words", "n_chars", "n_tokens")
+          snap.drop(counts: _*).join(encoded, Seq(c.idCol), "left")
+            .na.fill(0L, counts)
         case Config.CorpusSelect(lang, buckets, minScore, artifact) =>
           // DSIR selection: fit the dense bucket model on the curated frame
           // (train-if-missing under `artifact` — and score under the
@@ -875,9 +878,8 @@ object ConfigRuntime {
                 s"'$path' — run the batch corpus journey (train-if-missing) first")
             val stats = family match {
               case "wordpiece" => graft.operators.WordPiece.tokenStatsFast(
-                spark, text,
-                graft.operators.WordPiece.loadTokenizer(path.toString))
-              case _ => graft.operators.Bpe.tokenStatsFast(spark, text,
+                text, graft.operators.WordPiece.loadTokenizer(path.toString))
+              case _ => graft.operators.Bpe.tokenStatsFast(text,
                 graft.operators.Bpe.loadTokenizer(path.toString))
             }
             df.withColumn("__ts", stats)

@@ -55,9 +55,12 @@ object Q {
     val out = java.nio.file.Paths.get(outPath)
     val dir = out.getParent
     java.nio.file.Files.createDirectories(dir)
-    // Serialize the check-build-write sequence across processes (r16
-    // advice): without the lock, a concurrent builder could read a marker
-    // another process is mid-way through re-earning.
+    // Exclusive check-build-write: without the lock, a concurrent builder
+    // could read a marker another process is mid-way through re-earning.
+    // The lock is fail-fast, not a wait: a second process (or a second
+    // thread of this JVM) staging the same fixture meanwhile gets an
+    // ExecutionBusyException and its head fails; it does not block until
+    // the first build finishes.
     val marker = dir.resolve("_graft_fixture.json")
     graft.sources.Hygiene.withFileLock(dir.resolve("_graft_fixture.lock"),
       s"Another graft process is staging fixture '$outPath'.") {

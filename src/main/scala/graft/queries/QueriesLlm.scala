@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
@@ -728,11 +729,9 @@ object QueriesLlm {
     // corpus + truth construction is shared with dedup_band_sweep.
     "dedup_recall" -> { (s, d) =>
       val (evalCorpus, truth) = plantedEval(s, d)
-      val foldFn = graft.functions.BandFold.register(s, 16, 4,
-        Dedup.BandFoldPrime)
       val withBands = Dedup.signedShingles(evalCorpus, "text", "doc_id", 3, 64)
         .select(col("doc_id"), col("sh"),
-          call_function(foldFn, col("sig")).as("bs"))
+          Dedup.bandFold(col("sig"), 16, 4).as("bs"))
       val scored = truth
         .join(withBands.select(col("doc_id").as("id_a"), col("sh").as("sh_a"),
           col("bs").as("ba")), "id_a")
@@ -758,31 +757,27 @@ object QueriesLlm {
     // catches nearly all jacc~0.58 prefix pairs, 16x4 some, 8x8 few.
     "dedup_band_sweep" -> { (s, d) =>
       val (evalCorpus, truth) = plantedEval(s, d)
-      val fns = BandSweepSettings.map { case (b, r) =>
-        (b, r, graft.functions.BandFold.register(s, b, r,
-          Dedup.BandFoldPrime))
-      }
       val withBands = Dedup.signedShingles(evalCorpus, "text", "doc_id",
         3, 64)
         .select(col("doc_id") +: col("sh") +:
-          fns.map { case (b, _, fn) =>
-            call_function(fn, col("sig")).as(s"bs$b") }: _*)
+          BandSweepSettings.map { case (b, r) =>
+            Dedup.bandFold(col("sig"), b, r).as(s"bs$b") }: _*)
       val scored = truth
         .join(withBands.select(col("doc_id").as("id_a") +:
           col("sh").as("sh_a") +:
-          fns.map { case (b, _, _) => col(s"bs$b").as(s"ba$b") }: _*),
+          BandSweepSettings.map { case (b, _) => col(s"bs$b").as(s"ba$b") }: _*),
           "id_a")
         .join(withBands.select(col("doc_id").as("id_b") +:
           col("sh").as("sh_b") +:
-          fns.map { case (b, _, _) => col(s"bs$b").as(s"bb$b") }: _*),
+          BandSweepSettings.map { case (b, _) => col(s"bs$b").as(s"bb$b") }: _*),
           "id_b")
         .select(col("kind") +:
           Text.jaccard(col("sh_a"), col("sh_b")).as("jacc") +:
-          fns.map { case (b, _, _) =>
+          BandSweepSettings.map { case (b, _) =>
             Dedup.bandMatch(col(s"ba$b"), col(s"bb$b"), b).as(s"d$b") }: _*)
       scored
         .select(col("kind"), col("jacc"), explode(array(
-          fns.map { case (b, r, _) =>
+          BandSweepSettings.map { case (b, r) =>
             struct(lit(b).as("bands"), lit(r).as("rows_per_band"),
               col(s"d$b").as("detected"))
           }: _*)).as("st"))
@@ -1196,10 +1191,10 @@ object QueriesLlm {
       }
       val merges = WordPiece.loadTokenizer(path.toString)
       val (headP, contP) = WordPiece.pieceVocab(docs, "text", merges)
-      val fn = graft.functions.WordPieceLmm.register(s, headP, contP)
       docs.select(col("doc_id"),
-          call_function(fn,
-            filter(Text.tokens(col("text")), w => w =!= "")).as("st"))
+          column(graft.functions.WordPieceLmm(expression(
+            filter(Text.tokens(col("text")), w => w =!= "")), headP, contP))
+            .as("st"))
         .select(col("doc_id"), col("st.n_words"), col("st.n_chars"),
           col("st.n_tokens"), col("st.n_unk"))
         // zero-token docs are absent, matching the oracle's tf join
@@ -1279,8 +1274,8 @@ object QueriesLlm {
     "doc_fingerprint" -> { (s, d) =>
       // codegen'd custom expression; Text.fingerprint is the HOF reference
       // implementation (spec-proven identical on ASCII corpora)
-      graft.functions.PolyHash.register(s)
-      documents(s, d).select(col("doc_id"), expr("poly_hash(text)").as("fp"))
+      documents(s, d).select(col("doc_id"),
+        column(graft.functions.PolyHash(expression(col("text")))).as("fp"))
     },
 
     "multimodal_meta" -> { (s, d) =>

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -288,11 +289,8 @@ object QueriesMining {
     * reference). Spec-pinned on a synthetic hard topic shift.
     */
   private[graft] def tileScores(
-      text: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val fn = graft.functions.TileScores.register(
-      org.apache.spark.sql.SparkSession.active, TileB)
-    call_function(fn, Text.tokens(text))
-  }
+      text: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    column(graft.functions.TileScores(expression(Text.tokens(text)), TileB))
 
   /** The higher-order-function reference formulation of [[tileScores]]. */
   private[graft] def tileScoresHof(
@@ -363,10 +361,10 @@ object QueriesMining {
         val df = dfMap(t)
         math.log((nCorpus.toDouble - df + 0.5) / (df.toDouble + 0.5))
       }
-      val fn = graft.functions.Bm25Scores.register(s, terms, idfs,
-        terms.map(masks), qidSeq, avgdl)
+      val bm25 = column(graft.functions.Bm25Scores(expression(col("w")),
+        terms, idfs, terms.map(masks), qidSeq, avgdl))
       val scored = corpus
-        .select(col("doc_id"), explode(call_function(fn, col("w"))).as("e"))
+        .select(col("doc_id"), explode(bm25).as("e"))
         .select(col("e.qid").as("qid"), col("doc_id"),
           col("e.score").as("score"), col("e.n_terms").as("n_terms"))
       val top = Curation.groupTopK(scored, "qid", "doc_id", col("score"),
@@ -418,10 +416,10 @@ object QueriesMining {
       // fold → project, zero shuffles at every scale. Result-equal to the
       // relational twin (MiningSpec pins it) and the DuckDB oracle: the
       // fold sums the SAME round-6 term micros the decimal sum accumulates.
-      graft.functions.EntropyStats.register(s)
       documents(s, d)
         .select(col("doc_id"),
-          call_function("entropy_stats", Text.tokens(col("text"))).as("st"))
+          column(graft.functions.EntropyStats(expression(
+            Text.tokens(col("text"))))).as("st"))
         .select(col("doc_id"), col("st.n_words").as("n_words"),
           col("st.n_distinct").as("n_distinct"), col("st.entropy").as("entropy"))
         .withColumn("distinct_ratio",
@@ -529,12 +527,8 @@ object QueriesMining {
           least(lit(ZipfChunk), col("k") - col("ci") * ZipfChunk).as("k"),
           col("cnt"))
       val sums = chunked.select(
-        org.apache.spark.sql.GraftColumnBridge.column(
-          graft.functions.ZipfLevelSums(
-            org.apache.spark.sql.GraftColumnBridge.expression(col("base")),
-            org.apache.spark.sql.GraftColumnBridge.expression(col("k")),
-            org.apache.spark.sql.GraftColumnBridge.expression(col("cnt"))))
-          .as("s"))
+        column(graft.functions.ZipfLevelSums(expression(col("base")),
+          expression(col("k")), expression(col("cnt")))).as("s"))
       sums.agg(sum(col("s.n")).cast("long").as("n_vocab"),
           sum(col("s.sx")).cast("double").as("sx"),
           sum(col("s.sy")).cast("double").as("sy"),
@@ -698,12 +692,12 @@ object QueriesMining {
     if (capped.length > maxVocab) return coocPpmiStringKey(words)
     val uniRows = capped.map(r => (r.getString(0), r.getLong(1)))
       .sortBy { case (t, c) => (-c, t) }
-    val fn = graft.functions.PackedSkipPairs
-      .register(s, uniRows.map(_._1).toIndexedSeq)
+    val pairs = column(graft.functions.PackedSkipPairs(expression(col("w")),
+      uniRows.map(_._1).toIndexedSeq))
     val dict = broadcast(uniRows.toIndexedSeq.zipWithIndex
       .map { case ((t, c), i) => (i.toLong, t, c) }
       .toDF("id", "tok", "c"))
-    val c12 = words.select(explode(call_function(fn, col("w"))).as("key"))
+    val c12 = words.select(explode(pairs).as("key"))
       .groupBy(col("key")).agg(count(lit(1)).as("c12"))
     // p_total = Σ c12 over the already-aggregated pair counts — the raw
     // pair stream is never exploded a second time; t_total needs only a

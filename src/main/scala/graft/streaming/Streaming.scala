@@ -450,7 +450,7 @@ object Streaming {
     val alerts = readTable(spark, sfDir, "documents")
       .where(col("doc_id") >= qCap)
       .select(col("doc_id"),
-        explode(Retrieval.percolateAlerts(spark, col("text"), fitted, frac))
+        explode(Retrieval.percolateAlerts(col("text"), fitted, frac))
           .as("a"))
       .select(col("doc_id"), col("a.qid").as("qid"),
         col("a.score").as("score"))
@@ -588,19 +588,13 @@ object Streaming {
     import graft.operators.{Curation, Dedup, IncrementalDedup}
     val (digBm, bandBm, p) =
       IncrementalDedup.ingestScreens(spark, indexDir, mBits, numHashes)
-    val shingleFn = graft.functions.ShingleJoin.register(spark, p.shingleSize)
-    val hashFn = graft.functions.PortableHashArr.register(spark,
-      Dedup.MersennePrime)
-    val sigFn = graft.functions.MinhashSig.register(spark,
-      Dedup.permParams(p.numPerm), Dedup.MersennePrime)
-    val foldFn = graft.functions.BandFold.register(spark, p.bands,
-      p.numPerm / p.bands, Dedup.BandFoldPrime)
     val t = col("text")
     val shingleable = size(Text.tokens(t)) >= p.shingleSize
     val digest = sha2(coalesce(concat(lit("t:"), t.cast("string")),
       lit("null:")), 256)
-    val bands = call_function(foldFn, call_function(sigFn,
-      call_function(hashFn, call_function(shingleFn, Text.tokens(t)))))
+    val bands = Dedup.bandFold(Dedup.signature(
+      Dedup.shingleSet(Text.tokens(t), p.shingleSize), p.numPerm),
+      p.bands, p.numPerm / p.bands)
     // stage the signature chain once per row, then probe — the band array
     // is computed in one projection so the 16 probes don't re-run it
     val staged = readTable(spark, sfDir, "documents")

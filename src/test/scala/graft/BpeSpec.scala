@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Bpe
@@ -106,7 +107,7 @@ class BpeSpec extends SparkSpec {
     // the codegen'd fast path (functions.BpeStats) must land identically
     // on every row: merging words, open-vocabulary fallback, the empty doc
     val fast = docs
-      .withColumn("s", Bpe.tokenStatsFast(spark, col("text"), merges))
+      .withColumn("s", Bpe.tokenStatsFast(col("text"), merges))
       .select(col("doc_id"), col("s.n_words"), col("s.n_chars"),
         col("s.n_tokens"))
       .collect()
@@ -224,7 +225,6 @@ class BpeSpec extends SparkSpec {
   test("wordpiece longest-match: greedy walk, [UNK] contract, piece vocab") {
     import graft.operators.WordPiece
     import graft.functions.WordPieceLmm
-    import org.apache.spark.sql.functions.{array, call_function}
     // corpus chosen so the trained pieces are known: "abab abab ab cd"
     val train = Seq((1L, "abab abab ab cd")).toDF("doc_id", "text")
     val model = WordPiece.train(train, "text", 8)
@@ -233,9 +233,10 @@ class BpeSpec extends SparkSpec {
     // head/continuation pieces only where a round left them unmerged
     assert(headP.contains("abab") && headP.contains("ab") &&
       headP.contains("cd"))
-    val fn = WordPieceLmm.register(spark, headP, contP)
+    val fn = (w: org.apache.spark.sql.Column) =>
+      column(WordPieceLmm(expression(w), headP, contP))
     def seg(w: String) = Seq(w).toDF("w")
-      .select(call_function(fn, array(col("w"))).as("s"))
+      .select(fn(array(col("w"))).as("s"))
       .select(col("s.n_tokens"), col("s.n_unk")).collect().head
     // exact-vocab words: one piece, no unk
     assert(seg("abab").toSeq == Seq(1L, 0L))
@@ -248,9 +249,9 @@ class BpeSpec extends SparkSpec {
     // a word with an out-of-alphabet char is one [UNK]
     assert(seg("xyz").toSeq == Seq(1L, 1L))
     // empty piece sets: everything is [UNK]
-    val fnEmpty = WordPieceLmm.register(spark, Seq.empty, Seq.empty)
     val e = Seq("aa").toDF("w")
-      .select(call_function(fnEmpty, array(col("w"))).as("s"))
+      .select(column(WordPieceLmm(expression(array(col("w"))), Seq.empty,
+        Seq.empty)).as("s"))
       .select(col("s.n_tokens"), col("s.n_unk")).collect().head
     assert(e.toSeq == Seq(1L, 1L))
   }
@@ -258,7 +259,6 @@ class BpeSpec extends SparkSpec {
   test("wordpiece longest-match never splits a surrogate pair") {
     import graft.operators.WordPiece
     import graft.functions.WordPieceLmm
-    import org.apache.spark.sql.functions.{array, call_function}
     val emoji = new String(Character.toChars(0x1F600))
     val train = Seq((1L, s"a$emoji a$emoji ${emoji}b")).toDF("doc_id", "text")
     val model = WordPiece.train(train, "text", 4)
@@ -269,9 +269,10 @@ class BpeSpec extends SparkSpec {
         !Character.isHighSurrogate(p.charAt(p.length - 1)),
         s"piece '$p' is surrogate-cut")
     }
-    val fn = WordPieceLmm.register(spark, headP, contP)
+    val fn = (w: org.apache.spark.sql.Column) =>
+      column(WordPieceLmm(expression(w), headP, contP))
     val r = Seq(s"a${emoji}b").toDF("w")
-      .select(call_function(fn, array(col("w"))).as("s"))
+      .select(fn(array(col("w"))).as("s"))
       .select(col("s.n_words"), col("s.n_chars"), col("s.n_tokens"),
         col("s.n_unk")).collect().head
     assert(r.getLong(0) == 1L && r.getLong(1) == 3L)
@@ -292,7 +293,7 @@ class BpeSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     val perRow = apply.select(col("doc_id"),
-        WordPiece.tokenStatsFast(spark, col("text"), merges).as("s"))
+        WordPiece.tokenStatsFast(col("text"), merges).as("s"))
       .select(col("doc_id"), col("s.n_words"), col("s.n_chars"),
         col("s.n_tokens"))
       .collect().map(r => r.getLong(0) ->

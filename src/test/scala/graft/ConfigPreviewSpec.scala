@@ -268,6 +268,33 @@ class ConfigPreviewSpec extends SparkSpec {
       "the second run must hydrate, not retrain")
   }
 
+  test("corpus filter → tokenize overwrites counts the source already carries") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_corpus_tok_counts")
+    // the test tables' documents carry n_chars; stale values must not
+    // survive, nor make the step's own n_chars ambiguous
+    Seq((1L, "aaab aaab ab", 99L), (2L, "aaab ab ab", 99L), (3L, "", 99L))
+      .toDF("doc_id", "text", "n_chars")
+      .write.parquet(dir.resolve("documents.parquet").toString)
+    val doc =
+      """sources:
+        |  - id: docs
+        |    loader: { transport: fs, path: documents.parquet, reader: { format: parquet } }
+        |corpus:
+        |  source: docs
+        |  steps:
+        |    - { step: filter, max_repetition: 0.8 }
+        |    - { step: tokenize, artifact: tok.json, rounds: 4 }
+        |""".stripMargin
+    val out = ConfigRuntime.corpus(spark, dir.toString, Config.parseProject(doc))
+    assert(out.columns.count(_ == "n_chars") == 1)
+    val rows = out.select("doc_id", "n_words", "n_chars", "n_tokens")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toSet
+    // the hand-computed counts of the tokenize-only journey above
+    assert(rows == Set((1L, 3L, 10L, 3L), (2L, 3L, 8L, 3L), (3L, 0L, 0L, 0L)))
+  }
+
   test("corpus select step trains the model once, then scores under the hydrated artifact") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_corpus_select")

@@ -222,6 +222,23 @@ class CrawlSpec extends SparkSpec {
     assert(r2("d") == 150000L)
   }
 
+  test("pageRankHosts releases its pinned frames when the rounds fail") {
+    // a weight that raises only at execution time: the distributed path
+    // pins the edge and host frames, then the eager round checkpoint fails
+    val edges = Crawl.linkGraph(linkPages, "id", "host", col("links"))
+      .withColumn("weight", when(col("src_host") === "d",
+        raise_error(lit("bad edge weight")).cast("long"))
+        .otherwise(col("weight")))
+    def cached = org.apache.spark.sql.GraftCacheProbe.cachedEntries(spark)
+    val before = cached
+    spark.conf.set("graft.graph.driver_max_edges", "0")
+    try {
+      val e = intercept[Exception](Crawl.pageRankHosts(edges, iters = 2))
+      assert(e.getMessage.contains("bad edge weight"))
+    } finally spark.conf.unset("graft.graph.driver_max_edges")
+    assert(cached == before, "a pinned frame outlived the call")
+  }
+
   test("host-graph fixpoints: driver path equals the distributed path") {
     // the bounded-edges gate (graft.graph.driver_max_edges) picks a driver
     // loop for small graphs; both paths must produce identical integer

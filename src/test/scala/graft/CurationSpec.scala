@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
@@ -141,10 +142,9 @@ class CurationSpec extends SparkSpec {
       "dup gram dup gram dup gram dup gram", // repeated n-grams count once
       "short", "",
       (1 to 50).map(i => s"w$i").mkString(" ")).toDF("text")
-    graft.functions.BloomNgramHits.register(spark)
     val out = docs.select(
-      call_function("bloom_ngram_hits",
-        Text.tokens(col("text")), bitmapLit, lit(3), lit(2)).as("fast"),
+      column(graft.functions.BloomNgramHits(expression(Text.tokens(col("text"))),
+        expression(bitmapLit), 3, 2)).as("fast"),
       Curation.bloomHitsHof(Text.tokens(col("text")), bitmapLit, 3,
         mBits, 2).as("slow"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))

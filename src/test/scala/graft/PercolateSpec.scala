@@ -37,7 +37,7 @@ class PercolateSpec extends SparkSpec {
       Retrieval.percolatorFit(docs, 20L))
     val self = docs.where(col("doc_id") < 20L)
       .select(col("doc_id"),
-        explode(Retrieval.percolateAlerts(spark, col("text"), fitted, 1.0))
+        explode(Retrieval.percolateAlerts(col("text"), fitted, 1.0))
           .as("a"))
       .select(col("doc_id"), col("a.qid"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
@@ -35,14 +36,14 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("codegen'd poly_hash equals the HOF fingerprint on the corpus") {
-    graft.functions.PolyHash.register(spark)
+    val polyHash = column(graft.functions.PolyHash(expression(col("text"))))
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
     val mismatches = docs
-      .select(Text.fingerprint(col("text")).as("a"), expr("poly_hash(text)").as("b"))
+      .select(Text.fingerprint(col("text")).as("a"), polyHash.as("b"))
       .filter(col("a") =!= col("b")).count()
     assert(mismatches == 0)
     // interpreted eval path too (constant folding happens pre-codegen)
-    val one = Seq("ab").toDF("text").select(expr("poly_hash(text)")).head().getLong(0)
+    val one = Seq("ab").toDF("text").select(polyHash).head().getLong(0)
     assert(one == (97L * 31 + 98) % 1000000007)
   }
 
@@ -179,66 +180,53 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("codegen'd shingle_join and minhash_sig equal the HOF constructions on the corpus") {
-    val shingleFn = graft.functions.ShingleJoin.register(spark, 3)
-    val sigFn = graft.functions.MinhashSig.register(spark,
-      Dedup.permParams(64), Dedup.MersennePrime)
+    def sigOf(hs: org.apache.spark.sql.Column) = column(graft.functions.MinhashSig(
+      expression(hs), Dedup.permParams(64), Dedup.MersennePrime))
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
     val hofSh = array_distinct(Text.shingles(Text.tokens(col("text")), 3))
-    val fastSh = call_function(shingleFn, Text.tokens(col("text")))
-    val hashFn = graft.functions.PortableHashArr.register(spark, Dedup.MersennePrime)
+    val fastSh = Dedup.shingleSet(Text.tokens(col("text")), 3)
     val hofHs = transform(fastSh, t => pmod(Text.portableHash(t), lit(Dedup.MersennePrime)))
-    val hs = call_function(hashFn, fastSh)
+    val hs = column(graft.functions.PortableHashArr(expression(fastSh),
+      Dedup.MersennePrime))
     val hofSig = array(Dedup.permParams(64).map { case (a, b) =>
       array_min(transform(hs, h => pmod(h * a + b, lit(Dedup.MersennePrime))))
     }: _*)
     val mismatches = docs.select(
         hofSh.as("a"), fastSh.as("b"), hofSig.as("sa"),
-        call_function(sigFn, hs).as("sb"), hofHs.as("ha"), hs.as("hb"))
+        sigOf(hs).as("sb"), hofHs.as("ha"), hs.as("hb"))
       .filter(col("a") =!= col("b") || col("sa") =!= col("sb") ||
         col("ha") =!= col("hb")).count()
     assert(mismatches == 0)
     // edge cases: fewer tokens than the shingle width → empty set → all-NULL sig
     import spark.implicits._
     val tiny = Seq("one two", "a a a a").toDF("text")
-      .select(call_function(shingleFn, Text.tokens(col("text"))).as("sh"))
-      .withColumn("sig", call_function(sigFn,
+      .select(Dedup.shingleSet(Text.tokens(col("text")), 3).as("sh"))
+      .withColumn("sig", sigOf(
         transform(col("sh"), t => pmod(Text.portableHash(t), lit(Dedup.MersennePrime)))))
       .collect()
     assert(tiny(0).getSeq[String](0).isEmpty)
     assert(tiny(0).getSeq[Any](1).forall(_ == null))
     assert(tiny(1).getSeq[String](0) == Seq("a a a")) // duplicates collapse
     // band_fold equals the HOF slice-fold, including NULL poisoning
-    val bandFn = graft.functions.BandFold.register(spark, 16, 4, Dedup.BandFoldPrime)
     val hofBands = transform(sequence(lit(0), lit(15)),
       b => Dedup.bandHash(slice(col("sig"), b * 4 + 1, lit(4))))
-    val sigs = docs.select(call_function(sigFn, hs).as("sig"))
+    val sigs = docs.select(sigOf(hs).as("sig"))
     val bandMismatch = sigs.select(hofBands.as("a"),
-        call_function(bandFn, col("sig")).as("b"))
+        Dedup.bandFold(col("sig"), 16, 4).as("b"))
       .filter(col("a") =!= col("b")).count()
     assert(bandMismatch == 0)
     val nullSig = Seq(Seq[Option[Long]](None, None, None, None)).toDF("x")
-      .select(call_function(graft.functions.BandFold.register(spark, 1, 4,
-        Dedup.BandFoldPrime), col("x")).as("b")).head()
+      .select(Dedup.bandFold(col("x"), 1, 4).as("b")).head()
     assert(nullSig.getSeq[Any](0) == Seq(null))
-    // registrations with different defining constants land on distinct
-    // names (the registry is last-writer-wins session-wide)
-    assert(graft.functions.BandFold.register(spark, 16, 4, Dedup.BandFoldPrime)
-      != graft.functions.BandFold.register(spark, 16, 4, Dedup.BandFoldPrime + 2))
-    assert(graft.functions.MinhashSig.register(spark,
-        Dedup.permParams(64), Dedup.MersennePrime)
-      != graft.functions.MinhashSig.register(spark,
-        Dedup.permParams(64).map { case (a, b) => (a + 1, b) },
-        Dedup.MersennePrime))
   }
 
   test("codegen'd dot_prod equals the HOF fold bit-for-bit; NULL on mismatch") {
-    graft.functions.DotProd.register(spark)
     val e = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val a = e.select(col("vec_id"), Similarity.toDouble(col("embedding")).as("v"))
     val pairs = a.as("x").join(a.as("y"), col("x.vec_id") + 1 === col("y.vec_id"))
     val bad = pairs.select(
         Similarity.dot(col("x.v"), col("y.v")).as("hof"),
-        call_function("dot_prod", col("x.v"), col("y.v")).as("fast"))
+        Similarity.dotF(col("x.v"), col("y.v")).as("fast"))
       .filter(col("hof") =!= col("fast") || col("hof").isNull =!= col("fast").isNull)
       .count()
     assert(bad == 0)
@@ -246,7 +234,7 @@ class TextDedupSpec extends SparkSpec {
     import spark.implicits._
     val mm = Seq((Seq(1.0, 2.0), Seq(3.0))).toDF("a", "b")
       .select(Similarity.dot(col("a"), col("b")).as("hof"),
-        call_function("dot_prod", col("a"), col("b")).as("fast")).head()
+        Similarity.dotF(col("a"), col("b")).as("fast")).head()
     assert(mm.isNullAt(0) && mm.isNullAt(1))
   }
 

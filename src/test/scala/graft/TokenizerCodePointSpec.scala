@@ -43,7 +43,7 @@ class TokenizerCodePointSpec extends SparkSpec {
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
       .toMap
     val ref = stats(Bpe.tokenStats(col("text"), merges))
-    val fast = stats(Bpe.tokenStatsFast(spark, col("text"), merges))
+    val fast = stats(Bpe.tokenStatsFast(col("text"), merges))
     val joined = Bpe.encodeStatsWith(docs, "doc_id", "text", merges)
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
@@ -70,7 +70,7 @@ class TokenizerCodePointSpec extends SparkSpec {
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
       .toMap
     val perRow = apply.select(col("doc_id"),
-        WordPiece.tokenStatsFast(spark, col("text"), model.merges).as("s"))
+        WordPiece.tokenStatsFast(col("text"), model.merges).as("s"))
       .select(col("doc_id"), col("s.n_words"), col("s.n_chars"),
         col("s.n_tokens"))
       .collect()

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.UnigramSeg
 import graft.operators.Unigram
 
 /** Unigram-LM tokenizer trainer: Viterbi segmentation semantics (integer
@@ -13,9 +12,7 @@ class UnigramSpec extends SparkSpec {
   import spark.implicits._
 
   private def seg(word: String, pieces: Seq[(String, Long)]): Seq[String] = {
-    val fn = UnigramSeg.register(spark, pieces, Unigram.MaxPieceLen,
-      Unigram.UnkLpMicros)
-    Seq(word).toDF("w").select(call_function(fn, $"w").as("s"))
+    Seq(word).toDF("w").select(Unigram.segment($"w", pieces).as("s"))
       .collect().head.getSeq[String](0)
   }
 
